@@ -627,3 +627,213 @@ def test_string_id_index_serves_end_to_end(spark, tmp_path):  # noqa: F811
     ).collect()
     assert len(exact) > 0
     assert all(r["neighbor_id"] in keys for r in exact)
+
+
+def test_ivf_indexed_matches_numpy_bruteforce(spark):  # noqa: F811
+    """The IVF serving path — per-partition top-k in the scoring kernel,
+    merged on the driver — equals a numpy brute force over the same
+    artifacts: ids, scores and ranks, with string ids, a 3-partition
+    assignment table, tied scores cut at the k boundary, an id listed
+    in two probed lists, a query that is itself indexed, and a query
+    with fewer candidates than k."""
+    import numpy as np
+
+    from tests.conftest import bruteforce_ranked, tricky_ivf_index
+    from yelp_recommender_spark.operators.ann import ivf_topk_indexed
+
+    qdf, queries, assigned, rows, centers = tricky_ivf_index(spark)
+    assert assigned.rdd.getNumPartitions() == 3
+    qn = [np.asarray(v) / np.linalg.norm(v) for _, v in queries]
+    for k in (2, 5):
+        got = sorted(
+            tuple(r)
+            for r in ivf_topk_indexed(
+                qdf, assigned, centers, k=k, n_probe=2,
+                id_col="doc_key", vec_col="embedding",
+            ).collect()
+        )
+        want = bruteforce_ranked(
+            queries, rows, centers, 2, k,
+            lambda qi, row: qn[qi] @ np.asarray(row[1]),
+        )
+        assert got == want
+        # the scenarios the fixture plants really occur
+        assert sum(r[0] == "q-small" for r in got) == min(k, 3)
+        # three exact ties rank first, ordered by id, cut at k=2
+        by_rank = sorted((r for r in got if r[0] == "q-tie"), key=lambda r: r[3])
+        assert [r[1] for r in by_rank][:3] == ["tie-a", "tie-b", "tie-c"][:k]
+        assert all(r[0] != r[1] for r in got)
+        assert any(r[:2] == ("q-multi", "multi") for r in got)
+
+
+def test_probe_routing_groups_like_the_reference_loop(spark):  # noqa: F811
+    """probe_routing's vectorized grouping yields the same routes as
+    the per-query double loop it replaced: every centroid maps to the
+    ascending row numbers of the queries that probe it."""
+    import numpy as np
+
+    from yelp_recommender_spark.operators.ann import probe_routing
+
+    rng = np.random.default_rng(3)
+    centers = rng.standard_normal((9, 5))
+    qdf = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(5)]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    ids, qmat, route = probe_routing(qdf, centers, 4)
+    top = np.argsort(-(qmat @ centers.T), axis=1)[:, :4]
+    want: dict = {}
+    for qi in range(top.shape[0]):
+        for c in top[qi]:
+            want.setdefault(int(c), []).append(qi)
+    assert route.keys() == want.keys()
+    for c, qi in want.items():
+        assert route[c].dtype == np.int64 and route[c].tolist() == qi
+    assert probe_routing(qdf.limit(0), centers, 4)[2] == {}
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_query_runs_two_jobs_and_rebuild_serves_new_index(
+    spark, tmp_path  # noqa: F811
+):
+    """A warm query_ann_index call runs at most two Spark jobs (collect
+    the queries, scan the index) on both tiers; an in-place rebuild
+    with another seed or tier is served on the next call, never the
+    cached artifacts of the old build."""
+    import json
+
+    from tests.conftest import SF_DIR
+    from yelp_recommender_spark import ann_index
+    from yelp_recommender_spark.ann_index import (
+        build_ann_index,
+        query_ann_index,
+    )
+
+    src = SF_DIR + "/embeddings.parquet"
+    rows = spark.read.parquet(src).limit(6)
+    queries = spark.createDataFrame(rows.collect(), rows.schema)
+    idx = str(tmp_path / "idx")
+    kw = dict(n_centroids=8, m=4, ksub=16)
+
+    def serve():
+        return sorted(
+            tuple(r) for r in query_ann_index(
+                spark, idx, queries, k=4, n_probe=3
+            ).collect()
+        )
+
+    for tier in ("ivf", "ivfpq"):
+        build_ann_index(spark, src, idx, tier=tier, **kw)
+        cold = serve()
+        warm, jobs = _jobs_in_group(spark, f"warm-{tier}", serve)
+        assert warm == cold and len(warm) > 0
+        assert jobs <= 2, f"{tier}: a warm call ran {jobs} jobs"
+
+    # same dir, same tier, new seed: the served result is the new
+    # build's, i.e. what a cold load of the new artifacts returns
+    first_id = json.load(open(idx + "/meta.json"))["build_id"]
+    build_ann_index(spark, src, idx, tier="ivfpq", seed=7, **kw)
+    assert json.load(open(idx + "/meta.json"))["build_id"] != first_id
+    after = serve()
+    ann_index._ARTIFACTS.clear()
+    assert after == serve()
+
+    build_ann_index(spark, src, idx, tier="ivf", **kw)
+    assert "cos" in query_ann_index(spark, idx, queries, k=4).columns
+
+
+def test_empty_query_batch_returns_typed_empty_frame(spark, tmp_path):  # noqa: F811
+    """An empty query batch is served as an empty frame whose id
+    columns carry the index's id type (string keys here), on both
+    tiers, without scanning the index."""
+    from yelp_recommender_spark.ann_index import (
+        build_ann_index,
+        query_ann_index,
+    )
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(f"doc-{i:02d}", [float(i % 5) + 0.5, float(i % 3) - 1.0, 1.0])
+         for i in range(40)],
+        "doc_key string, embedding array<double>",
+    ).write.parquet(src)
+    empty = spark.read.parquet(src).limit(0)
+    for tier in ("ivf", "ivfpq"):
+        idx = str(tmp_path / f"idx_{tier}")
+        build_ann_index(
+            spark, src, idx, tier=tier, n_centroids=4, m=3, ksub=8,
+            id_col="doc_key",
+        )
+        query_ann_index(spark, idx, empty, k=5)  # loads the artifacts
+        res, jobs = _jobs_in_group(
+            spark, f"empty-{tier}",
+            lambda: query_ann_index(spark, idx, empty, k=5),
+        )
+        assert res.collect() == []
+        assert jobs <= 1  # collecting the (empty) queries, no scan
+        assert res.schema["query_id"].dataType.simpleString() == "string"
+        assert res.schema["neighbor_id"].dataType.simpleString() == "string"
+        assert res.columns[-1] == "rank"
+
+
+def test_serving_artifact_cache_is_bounded_under_threads(tmp_path, monkeypatch):
+    """Concurrent query_ann_index callers share the artifact cache: with
+    more threads than cores and a short switch interval, every caller
+    gets the artifacts of the build and session it asked for and the
+    cache never holds more than its fixed number of entries."""
+    import json
+    import sys
+    import threading
+
+    from yelp_recommender_spark import ann_index
+
+    dirs = []
+    for i in range(12):
+        d = tmp_path / f"idx{i}"
+        d.mkdir()
+        (d / "meta.json").write_text(json.dumps({"tier": "ivf", "i": i}))
+        dirs.append(str(d))
+    monkeypatch.setattr(
+        ann_index,
+        "_load_artifacts",
+        lambda spark, d, meta: {"meta": meta, "spark": spark},
+    )
+    monkeypatch.setattr(ann_index, "_ARTIFACTS", type(ann_index._ARTIFACTS)())
+    sessions = [object(), object()]  # entries are per session
+    errors, sizes = [], []
+
+    def worker(seed):
+        try:
+            for j in range(300):
+                i = (seed * 7 + j) % len(dirs)
+                spark = sessions[j % 2]
+                art = ann_index._serving_artifacts(spark, dirs[i])
+                if art["meta"]["i"] != i or art["spark"] is not spark:
+                    errors.append((i, art["meta"]))
+                sizes.append(len(ann_index._ARTIFACTS))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(sizes) == 16 * 300
+    assert max(sizes) <= ann_index._ARTIFACTS_SIZE

@@ -204,15 +204,23 @@ def test_q106_overlap_join_is_equi_not_nested_loop(spark):  # noqa: F811
 def test_new_ann_surfaces_plan_no_cartesian(spark):  # noqa: F811
     """The r6 operator surfaces are not catalog queries, so the catalog
     sweep above never sees their plans — pin them here: the bounded
-    near-dup contract on BOTH tiers and every topk_auto rung must plan
-    zero CartesianProduct (the LSH paths join on bucket/id keys; the
-    exact paths are map-only Arrow kernels)."""
+    near-dup contract on BOTH tiers and the exact topk_auto rung must
+    plan zero CartesianProduct (the LSH paths join on bucket/id keys;
+    the exact paths are map-only Arrow kernels). The ivf and ivfpq
+    rungs return a driver-merged local relation, so their scoring scans
+    are pinned instead: map-only, no CartesianProduct and no Exchange."""
     from pyspark.sql import functions as F
 
     from yelp_recommender_spark.operators.ann import (
         cosine_pairs_above,
         cosine_pairs_above_lsh,
+        ivf_fit_assign,
+        ivf_topk_scan,
         topk_auto,
+    )
+    from yelp_recommender_spark.operators.pq import (
+        ivfpq_topk_scan,
+        train_and_encode,
     )
     from yelp_recommender_spark.sources.tables import load_tables
 
@@ -228,14 +236,21 @@ def test_new_ann_surfaces_plan_no_cartesian(spark):  # noqa: F811
             n_planes=4, n_tables=2,
         ),
         "topk_exact": topk_auto(queries, emb, k=3, tier="exact"),
-        "topk_ivf": topk_auto(
-            queries, emb, k=3, tier="ivf", n_centroids=8, n_probe=4
-        ),
-        "topk_ivfpq": topk_auto(
-            queries, emb, k=3, tier="ivfpq",
-            n_centroids=8, n_probe=4, m=4, ksub=16,
-        ),
     }
     offenders = [n for n, df in plans.items()
                  if "CartesianProduct" in _plan(df)]
     assert not offenders, f"cartesian products planned in: {offenders}"
+
+    assigned, centers = ivf_fit_assign(emb, n_centroids=8)
+    books, coded = train_and_encode(assigned, centers, m=4, ksub=16)
+    scans = {
+        "ivf_scan": ivf_topk_scan(queries, assigned, centers, k=3, n_probe=4),
+        "ivfpq_scan": ivfpq_topk_scan(
+            queries, coded, centers, books, k=3, n_probe=4
+        ),
+    }
+    for name, scan in scans.items():
+        plan = _plan(scan)
+        assert "MapInPandas" in plan, (name, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
+        assert "Exchange" not in plan, (name, plan)

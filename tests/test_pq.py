@@ -256,3 +256,68 @@ def test_ivfpq_index_persists_and_serves(spark, tmp_path):  # noqa: F811
         ).collect()
     )
     assert inline == served and len(served) > 0
+
+
+@pytest.mark.parametrize("encoding", ["raw", "residual", "opq", "opq_residual"])
+def test_ivfpq_indexed_matches_numpy_bruteforce(spark, encoding):  # noqa: F811
+    """The IVF-PQ serving path — per-partition top-k in the ADC kernel,
+    merged on the driver — equals a numpy ADC brute force over the same
+    codes, codebooks, centers and rotation on every encoding: ids,
+    scores and ranks, with string ids, a 3-partition code table, tied
+    ADC scores (identical vectors share codes), an id listed in two
+    probed lists, a query that is itself indexed, and a query with
+    fewer candidates than k."""
+    from tests.conftest import bruteforce_ranked, tricky_ivf_index
+    from yelp_recommender_spark.operators import pq
+
+    qdf, queries, assigned, _, centers = tricky_ivf_index(spark)
+    kw = dict(id_col="doc_key", m=2, ksub=8)
+    rotation = None
+    if encoding == "opq":
+        books, coded, rotation = pq.train_and_encode_opq(assigned, **kw)
+    elif encoding == "opq_residual":
+        books, coded, rotation = pq.train_and_encode_opq_residual(
+            assigned, centers, **kw
+        )
+    else:
+        books, coded = pq.train_and_encode(
+            assigned, centers, encoding=encoding, **kw
+        )
+    # the encoders are map-only: the codes keep the 3 partitions
+    assert coded.rdd.getNumPartitions() == 3
+    code_rows = [(r[0], r["codes"], r["centroid_id"]) for r in coded.collect()]
+
+    qn = np.array([np.asarray(v) / np.linalg.norm(v) for _, v in queries])
+    qp = pq._pad_to_multiple(qn, books.shape[0])
+    if rotation is not None:
+        qp = qp @ rotation
+    luts = np.einsum(
+        "qjd,jkd->qjk", qp.reshape(len(qn), books.shape[0], -1), books
+    )
+
+    def adc(qi, row):
+        s = 0.0
+        for j, c in enumerate(row[1]):
+            s += luts[qi, j, c]
+        if encoding in ("residual", "opq_residual"):
+            s += qn[qi] @ centers[row[2]]
+        return s
+
+    for k in (2, 5):
+        got = sorted(
+            tuple(r)
+            for r in pq.ivfpq_topk_indexed(
+                qdf, coded, centers, books, k=k, n_probe=2,
+                id_col="doc_key", vec_col="embedding",
+                encoding=encoding, rotation=rotation,
+            ).collect()
+        )
+        assert got == bruteforce_ranked(queries, code_rows, centers, 2, k, adc)
+        assert sum(r[0] == "q-small" for r in got) == min(k, 3)
+        assert all(r[0] != r[1] for r in got)
+    # identical vectors share codes, so their estimates tie exactly
+    # and the cut falls on neighbor_id
+    ties = [r for r in got if r[0] == "q-tie" and r[1].startswith("tie-")]
+    assert len(ties) >= 2 and len({r[2] for r in ties}) == 1
+    by_rank = [r[1] for r in sorted(ties, key=lambda r: r[3])]
+    assert by_rank == sorted(by_rank)

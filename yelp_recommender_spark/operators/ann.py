@@ -958,16 +958,94 @@ def probe_routing(
     the results — the routing table rebuild is free (centers are
     already driver-resident)."""
     ids, qmat = _normalized_index(queries, id_col, vec_col)
-    route: dict[int, list[int]] = {}
-    if ids.size:
-        sims = qmat @ centers.T
-        top = np.argsort(-sims, axis=1)[:, :n_probe]
-        for qi in range(top.shape[0]):
-            for c in top[qi]:
-                route.setdefault(int(c), []).append(qi)
+    if not ids.size:
+        return ids, qmat, {}
+    top = np.argsort(-(qmat @ centers.T), axis=1)[:, :n_probe]
+    # group the flattened (query, centroid) probes by centroid; the
+    # stable sort keeps each centroid's query rows in ascending order
+    probes = top.ravel()
+    rows = np.repeat(np.arange(top.shape[0], dtype=np.int64), top.shape[1])
+    order = np.argsort(probes, kind="stable")
+    cents, starts = np.unique(probes[order], return_index=True)
     return ids, qmat, {
-        c: np.asarray(v, dtype=np.int64) for c, v in route.items()
+        int(c): qi for c, qi in zip(cents, np.split(rows[order], starts[1:]))
     }
+
+
+def topk_pair_schema(
+    queries: DataFrame, index: DataFrame, id_col: str, score_col: str
+) -> T.StructType:
+    """(query_id, neighbor_id, ``score_col``) — the scored-pair rows an
+    indexed scan emits, id types carried from each side."""
+    return T.StructType(
+        [
+            T.StructField("query_id", _id_type(queries, id_col)),
+            T.StructField("neighbor_id", _id_type(index, id_col)),
+            T.StructField(score_col, T.DoubleType()),
+        ]
+    )
+
+
+def _best_k(pairs: pd.DataFrame, score_col: str, k: int) -> pd.DataFrame:
+    """Each query's best ``k`` distinct neighbors: the max score per
+    (query_id, neighbor_id) — one id can sit in several probed lists or
+    partitions — then score desc, neighbor_id asc (a total order, so the
+    cut is deterministic on ties)."""
+    pairs = pairs.sort_values(
+        ["query_id", score_col, "neighbor_id"], ascending=[True, False, True]
+    )
+    pairs = pairs[~pairs.duplicated(["query_id", "neighbor_id"])]
+    return pairs.groupby("query_id", sort=False).head(k)
+
+
+def partition_topk(
+    pairs: Iterator[pd.DataFrame], score_col: str, k: int
+) -> Iterator[pd.DataFrame]:
+    """Wrap a scoring kernel's per-batch pair frames: drop self-matches
+    (and null ids, as the SQL ``!=`` filter did), keep each query's best
+    ``k`` across the partition's batches, yield them once at the end —
+    at most n_queries·k rows per partition. The local top-k loses
+    nothing: a pair ranked below k others in its partition is ranked
+    below at least those k distinct neighbors globally."""
+    best = None
+    for pdf in pairs:
+        q, n = pdf["query_id"], pdf["neighbor_id"]
+        pdf = pdf[q.notna() & n.notna() & (q != n)]
+        if best is not None:
+            pdf = pd.concat([best, pdf], ignore_index=True)
+        best = _best_k(pdf, score_col, k)
+    if best is not None and len(best):
+        yield best
+
+
+def merge_topk(
+    spark, scan: DataFrame | None, pair_schema: T.StructType, k: int
+) -> DataFrame:
+    """Collect a :func:`partition_topk` scan (``None``: no queries, no
+    job), merge the partitions' partial top-k lists on the driver and
+    rank 1..k. The driver receives at most n_queries·k rows per scanned
+    partition; the result is a local relation, so collecting it runs no
+    further Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    score_col = pair_schema.names[2]
+    tbl = (
+        scan.toArrow()
+        if scan is not None
+        else to_arrow_schema(pair_schema).empty_table()
+    )
+    best = _best_k(tbl.to_pandas(), score_col, k)
+    best["rank"] = best.groupby("query_id", sort=False).cumcount() + 1
+    schema = T.StructType(
+        pair_schema.fields + [T.StructField("rank", T.IntegerType(), False)]
+    )
+    return spark.createDataFrame(
+        pa.Table.from_pandas(
+            best, schema=to_arrow_schema(schema), preserve_index=False
+        ),
+        schema,
+    )
 
 
 def ivf_topk(
@@ -991,8 +1069,9 @@ def ivf_topk(
     Scale: the index never shuffles and is never broadcast — scoring is
     a map-only Arrow pass over the assignment table (one matmul per
     (batch, probed-centroid) group against the broadcast query
-    sub-matrix), emitting only the 24-byte scored pairs; the sole
-    shuffle is their dedup + per-query top-k. The query side is
+    sub-matrix) that keeps each partition's best k per query; there is
+    no shuffle. The driver merges those partial lists: at most
+    n_queries·k rows per assignment-table partition. The query side is
     collected + broadcast (the bounded side — see
     :func:`probe_routing`). Recall is data-dependent (no analytic
     bound, unlike SRP-LSH): tune n_probe against a recall measurement —
@@ -1023,7 +1102,7 @@ def ivf_topk(
     )
 
 
-def ivf_topk_indexed(
+def ivf_topk_scan(
     queries: DataFrame,
     assignments: DataFrame,
     centers: np.ndarray,
@@ -1031,33 +1110,25 @@ def ivf_topk_indexed(
     n_probe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`ivf_topk` served from a PREBUILT index — ``assignments``
-    is the (id, vec, centroid_id) table :func:`ivf_fit_assign` produced
-    (typically read back from parquet) and ``centers`` its routing
-    matrix (:func:`centers_from_df`). This is the production serving
-    loop: train once, persist assignments + centers alongside the
-    corpus, answer every query batch map-only against the persisted
-    table — the quantizer is never refit per batch."""
+) -> DataFrame | None:
+    """The scoring scan behind :func:`ivf_topk_indexed`, lazy: a
+    map-only Arrow pass over ``assignments`` yielding each table
+    partition's best ``k`` (query_id, neighbor_id, cos) rows per query
+    (:func:`partition_topk`). Routing collects the query side now (one
+    job); ``None`` when the query batch is empty."""
     spark = queries.sparkSession
     n_probe = min(n_probe, centers.shape[0])
     q_ids, q_mat, route = probe_routing(
         queries, centers, n_probe, id_col, vec_col
     )
+    if not q_ids.size:
+        return None
     b = spark.sparkContext.broadcast((q_ids, q_mat, route))
-
-    pair_schema = T.StructType(
-        [
-            T.StructField("query_id", _id_type(queries, id_col)),
-            T.StructField("neighbor_id", _id_type(assignments, id_col)),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_q, mat_q, route_q = b.value
         for pdf in batches:
-            if len(pdf) == 0 or ids_q.size == 0:
+            if len(pdf) == 0:
                 continue
             n_ids = pdf[id_col].to_numpy()
             X = np.array(list(pdf["vec"]), dtype=np.float64)  # normalized
@@ -1085,24 +1156,40 @@ def ivf_topk_indexed(
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    from yelp_recommender_spark.operators.topk import top_n_per_key
-
-    cand = (
-        assignments.mapInPandas(score, pair_schema)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        # a vector can sit in several probed lists of one query → dedup
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
+    return assignments.mapInPandas(
+        lambda it: partition_topk(score(it), "cos", k),
+        topk_pair_schema(queries, assignments, id_col, "cos"),
     )
-    return top_n_per_key(
-        cand,
-        ["query_id"],
-        "cos",
+
+
+def ivf_topk_indexed(
+    queries: DataFrame,
+    assignments: DataFrame,
+    centers: np.ndarray,
+    k: int = 10,
+    n_probe: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """:func:`ivf_topk` served from a PREBUILT index — ``assignments``
+    is the (id, vec, centroid_id) table :func:`ivf_fit_assign` produced
+    (typically read back from parquet) and ``centers`` its routing
+    matrix (:func:`centers_from_df`). This is the production serving
+    loop: train once, persist assignments + centers alongside the
+    corpus, answer every query batch with one map-only scan of the
+    persisted table — the quantizer is never refit per batch.
+
+    Runs two Spark jobs now (collect the queries, scan + collect the
+    partitions' top-k, :func:`ivf_topk_scan`) and returns a local
+    relation merged on the driver (:func:`merge_topk`)."""
+    return merge_topk(
+        queries.sparkSession,
+        ivf_topk_scan(
+            queries, assignments, centers, k, n_probe, id_col, vec_col
+        ),
+        topk_pair_schema(queries, assignments, id_col, "cos"),
         k,
-        tiebreak="neighbor_id",
-        rank_col="rank",
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "cos", "rank")
+    )
 
 
 def centers_to_df(spark, centers: np.ndarray) -> DataFrame:

@@ -585,14 +585,12 @@ def ivfpq_topk(
     encoding and ADC scoring are map-only Arrow passes over the
     assignment table; candidate pairs exist only inside the scoring
     kernel (per-query LUTs built once on the driver, byte-code gathers
-    per probed centroid group) and the sole shuffle is the 24-byte
-    scored pairs' dedup + per-query top-k. The query side is collected
-    + broadcast (the bounded side —
+    per probed centroid group), which keeps each partition's best k per
+    query. Serving has no shuffle: the driver merges those partial
+    lists, at most n_queries·k rows per code-table partition. The query
+    side is collected + broadcast (the bounded side —
     :func:`~yelp_recommender_spark.operators.ann.probe_routing`)."""
-    from yelp_recommender_spark.operators.ann import ivf_fit_assign
-    from yelp_recommender_spark.operators.topk import top_n_per_key
-
-    from yelp_recommender_spark.operators.ann import _id_type
+    from yelp_recommender_spark.operators.ann import _id_type, ivf_fit_assign
 
     if encoding not in ("raw", "residual", "opq", "opq_residual"):
         raise ValueError(f"ivfpq_topk: unknown encoding {encoding!r}")
@@ -796,36 +794,7 @@ def train_and_encode_opq_residual(
     return books, coded, rotation
 
 
-def ivfpq_topk_indexed(
-    queries: DataFrame,
-    coded: DataFrame,
-    centers: np.ndarray,
-    books: np.ndarray,
-    k: int = 10,
-    n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    encoding: str = "raw",
-    rotation: np.ndarray | None = None,
-) -> DataFrame:
-    """:func:`ivfpq_topk` served from a PREBUILT index — ``coded`` is
-    the (id, codes, centroid_id) table :func:`pq_encode` produced over
-    the IVF assignments (typically read back from parquet), ``centers``
-    the routing matrix
-    (:func:`~yelp_recommender_spark.operators.ann.centers_from_df`) and
-    ``books`` the codebooks (:func:`codebooks_from_df`). The production
-    serving loop: train + encode once, persist the three artifacts,
-    answer every query batch map-only against the persisted code table
-    — quantizers are never refit per batch.
-
-    ``encoding`` must state what the codes ARE (the same value the
-    encode side used): 'raw' scores Σ_j q_j·book[j, code_j]; 'residual'
-    adds the q·centroid base term per probed centroid group; 'opq'
-    scores with the ROTATED query against rotation-space codebooks
-    (``rotation`` required — it is a serving artifact like the books;
-    routing stays in the original space since R is orthogonal). A
-    mismatch would silently score garbage, so serving artifacts must
-    persist the encoding alongside the codebooks."""
+def _check_encoding(encoding: str, rotation: np.ndarray | None) -> None:
     if encoding not in ("raw", "residual", "opq", "opq_residual"):
         raise ValueError(
             f"ivfpq_topk_indexed: unknown encoding {encoding!r}"
@@ -836,25 +805,49 @@ def ivfpq_topk_indexed(
             "encoding='opq'/'opq_residual' and only then (a "
             "rotation/encoding mismatch scores garbage)"
         )
-    from yelp_recommender_spark.operators.ann import probe_routing
-    from yelp_recommender_spark.operators.topk import top_n_per_key
 
+
+def ivfpq_topk_scan(
+    queries: DataFrame,
+    coded: DataFrame,
+    centers: np.ndarray,
+    books: np.ndarray,
+    k: int = 10,
+    n_probe: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    encoding: str = "raw",
+    rotation: np.ndarray | None = None,
+) -> DataFrame | None:
+    """The ADC scoring scan behind :func:`ivfpq_topk_indexed`, lazy: a
+    map-only Arrow pass over ``coded`` yielding each code partition's
+    best ``k`` (query_id, neighbor_id, cos_pq) rows per query
+    (:func:`~yelp_recommender_spark.operators.ann.partition_topk`).
+    Routing collects the query side now (one job); ``None`` when the
+    query batch is empty."""
+    from yelp_recommender_spark.operators.ann import (
+        partition_topk,
+        probe_routing,
+        topk_pair_schema,
+    )
+
+    _check_encoding(encoding, rotation)
     spark = queries.sparkSession
     n_probe = min(n_probe, centers.shape[0])
     m_, ksub_, dsub = books.shape
     q_ids, q_mat, route = probe_routing(
         queries, centers, n_probe, id_col, vec_col
     )
+    if not q_ids.size:
+        return None
     # per-query ADC lookup tables against the probed routing, built ONCE
     # on the driver: luts[q, j, c] = q_sub_j · centroid_{j,c}
-    if q_mat.size:
-        qp = _pad_to_multiple(q_mat, m_)
-        if rotation is not None:  # OPQ: LUTs live in rotated space
-            qp = qp @ rotation
-        qp = qp.reshape(q_mat.shape[0], m_, dsub)
-    else:
-        qp = np.zeros((0, m_, dsub))
-    luts = np.einsum("qjd,jkd->qjk", qp, books)
+    qp = _pad_to_multiple(q_mat, m_)
+    if rotation is not None:  # OPQ: LUTs live in rotated space
+        qp = qp @ rotation
+    luts = np.einsum(
+        "qjd,jkd->qjk", qp.reshape(q_mat.shape[0], m_, dsub), books
+    )
     # residual modes need the probed queries and the routing matrix in
     # the kernel for the q·centroid base term — with the UNROTATED
     # query even under opq_residual (routing geometry is untouched; the
@@ -866,20 +859,10 @@ def ivfpq_topk_indexed(
     )
     b = spark.sparkContext.broadcast((q_ids, luts, route, resid_state))
 
-    from yelp_recommender_spark.operators.ann import _id_type
-
-    pair_schema = T.StructType(
-        [
-            T.StructField("query_id", _id_type(queries, id_col)),
-            T.StructField("neighbor_id", _id_type(coded, id_col)),
-            T.StructField("cos_pq", T.DoubleType()),
-        ]
-    )
-
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_q, luts_q, route_q, resid_q = b.value
         for pdf in batches:
-            if len(pdf) == 0 or ids_q.size == 0:
+            if len(pdf) == 0:
                 continue
             n_ids = pdf[id_col].to_numpy()
             codes = np.array(list(pdf["codes"]), dtype=np.intp)  # (B, m)
@@ -918,22 +901,61 @@ def ivfpq_topk_indexed(
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    cand = (
-        coded.mapInPandas(adc, pair_schema)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        # a vector can appear in several probed lists of one query
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_pq").alias("cos_pq"))
+    return coded.mapInPandas(
+        lambda it: partition_topk(adc(it), "cos_pq", k),
+        topk_pair_schema(queries, coded, id_col, "cos_pq"),
     )
-    return top_n_per_key(
-        cand,
-        ["query_id"],
-        "cos_pq",
+
+
+def ivfpq_topk_indexed(
+    queries: DataFrame,
+    coded: DataFrame,
+    centers: np.ndarray,
+    books: np.ndarray,
+    k: int = 10,
+    n_probe: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    encoding: str = "raw",
+    rotation: np.ndarray | None = None,
+) -> DataFrame:
+    """:func:`ivfpq_topk` served from a PREBUILT index — ``coded`` is
+    the (id, codes, centroid_id) table :func:`pq_encode` produced over
+    the IVF assignments (typically read back from parquet), ``centers``
+    the routing matrix
+    (:func:`~yelp_recommender_spark.operators.ann.centers_from_df`) and
+    ``books`` the codebooks (:func:`codebooks_from_df`). The production
+    serving loop: train + encode once, persist the three artifacts,
+    answer every query batch with one map-only scan of the persisted
+    code table — quantizers are never refit per batch.
+
+    Runs two Spark jobs now (collect the queries, scan + collect the
+    partitions' top-k, :func:`ivfpq_topk_scan`) and returns a local
+    relation merged on the driver
+    (:func:`~yelp_recommender_spark.operators.ann.merge_topk`).
+
+    ``encoding`` must state what the codes ARE (the same value the
+    encode side used): 'raw' scores Σ_j q_j·book[j, code_j]; 'residual'
+    adds the q·centroid base term per probed centroid group; 'opq'
+    scores with the ROTATED query against rotation-space codebooks
+    (``rotation`` required — it is a serving artifact like the books;
+    routing stays in the original space since R is orthogonal). A
+    mismatch would silently score garbage, so serving artifacts must
+    persist the encoding alongside the codebooks."""
+    from yelp_recommender_spark.operators.ann import (
+        merge_topk,
+        topk_pair_schema,
+    )
+
+    return merge_topk(
+        queries.sparkSession,
+        ivfpq_topk_scan(
+            queries, coded, centers, books, k, n_probe, id_col, vec_col,
+            encoding, rotation,
+        ),
+        topk_pair_schema(queries, coded, id_col, "cos_pq"),
         k,
-        tiebreak="neighbor_id",
-        rank_col="rank",
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "cos_pq", "rank")
+    )
 
 
 def codebooks_to_df(spark, codebooks: np.ndarray) -> DataFrame:

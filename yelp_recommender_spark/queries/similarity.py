@@ -333,9 +333,10 @@ def q43_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely clustered data (pinned by tests/test_ann.py). IVF's recall
     is data-dependent; SRP-LSH (q42) carries the analytic bound.
 
-    Scale: the index shuffles once on centroid_id; each query fans out
-    n_probe ways and joins on that key — no broadcast index, no driver
-    state beyond the (n_centroids × dim) routing table."""
+    Scale: the index is scanned once, map-only; each partition keeps
+    its top-k per query and the driver merges at most n_queries·k rows
+    per partition — no broadcast index, no shuffle of the index, no
+    driver state beyond the (n_centroids × dim) routing table."""
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     # probes and truth from ONE derivation — both sides share the same
     # probe DataFrame by construction (ADVICE r5)
@@ -434,9 +435,11 @@ def q45_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss on weakly-clustered synthetic data (expect ≈ the q43 routing
     ceiling scaled by the q44 quantization factor).
 
-    Scale: index shuffles once on centroid_id; queries fan out n_probe
-    ways; scoring is an Arrow-batch einsum over joined (qvec, codes) —
-    no broadcast index, no driver state beyond two sub-MB tables."""
+    Scale: the code table is scanned once, map-only, scoring codes by
+    ADC lookup against the broadcast per-query tables; each partition
+    keeps its top-k per query and the driver merges at most
+    n_queries·k rows per partition — no broadcast index, no driver
+    state beyond two sub-MB tables."""
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     probes, truth = _probes_and_truth(spark, sf_dir)  # one derivation
     exact = truth.select("query_id", "neighbor_id")
